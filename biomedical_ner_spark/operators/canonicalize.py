@@ -17,6 +17,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
+
+from ..session import driver_frame
 
 # ---------------------------------------------------------------------------
 # Salted two-phase aggregation (SURVEY.md §4.3.2)
@@ -97,13 +100,11 @@ def _driver_union_find(rows, template: DataFrame) -> DataFrame:
             # union by min so the root IS the min label
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    from pyspark.sql.types import StructField, StructType
-
     node_t = template.schema["src"].dataType
     schema = StructType([StructField("node", node_t),
                          StructField("component", node_t)])
     out = [(n, find(n)) for n in parent]
-    return template.sparkSession.createDataFrame(out, schema)
+    return driver_frame(template.sparkSession, out, schema)
 
 
 def connected_components(

@@ -29,6 +29,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
 from ..lexicon import build_alias_rows
+from ..session import driver_frame
 
 EMB_DIM = 32
 
@@ -56,23 +57,10 @@ def _seeded_vec(key: str, dim: int = EMB_DIM) -> np.ndarray:
 
 def alias_dim(spark: SparkSession) -> DataFrame:
     """The broadcast-side alias dimension table (FIXTURES.md §2)."""
-    return spark.createDataFrame(
-        build_alias_rows(),
+    return driver_frame(
+        spark, build_alias_rows(),
         "alias STRING, cui STRING, entity_type STRING, weight DOUBLE",
     )
-
-
-def _tfidf_cosine(a: str, b: str, idf: dict[str, float]) -> float:
-    wa: dict[str, float] = {}
-    for g in _char_ngrams(a):
-        wa[g] = wa.get(g, 0.0) + idf.get(g, 1.0)
-    wb: dict[str, float] = {}
-    for g in _char_ngrams(b):
-        wb[g] = wb.get(g, 0.0) + idf.get(g, 1.0)
-    dot = sum(w * wb.get(g, 0.0) for g, w in wa.items())
-    na = math.sqrt(sum(w * w for w in wa.values()))
-    nb = math.sqrt(sum(w * w for w in wb.values()))
-    return dot / (na * nb + 1e-12)
 
 
 def link_artifacts() -> tuple[list[tuple], dict[str, float]]:

@@ -9,12 +9,21 @@
 
 Invariants & ops story:
   * per-row content sha256 (P14) computed at ingest, carried through every
-    stage, re-verified at the sink; per-bucket sha_ok recorded in the
-    manifest.
-  * resumable: work is hash-bucketed by (repo, path, commit); each stage
-    writes bucket-partitioned parquet with dynamic partition overwrite
-    (idempotent per bucket) and appends per-bucket counter rows to the
-    manifest; a restart recomputes only buckets missing their manifest row.
+    stage, re-verified at the sink.
+  * each stage writes, verifies, then appends (manifest.py): its pending
+    buckets go to bucket-partitioned parquet with dynamic partition
+    overwrite set on the writer (idempotent per bucket, session conf
+    untouched); ONE action (verify_buckets) reads them back and yields
+    rows_in, rows_out and sha_ok per bucket; one manifest row per pending
+    bucket, empty ones included, is appended.
+  * resumable: work is hash-bucketed by (repo, path, commit); a restart
+    recomputes only buckets missing their manifest row.  Stage totals are
+    the verified rows_out plus the manifest rows_out of skipped buckets, so
+    no table is re-counted; a table written in this run is read back with
+    its writer's schema (no footer-inference job).
+  * the (cui -> canonical_id) map is computed once per run and written
+    next to the connected-components rounds; the corpus is cached for the
+    run and released even when a stage raises.
   * skew: canonical-id aggregation uses salted two-phase counts; the
     co-occurrence self-join relies on bounded per-doc mention counts
     (<= max_seq_len) + AQE skew splitting.
@@ -22,8 +31,11 @@ Invariants & ops story:
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from ..operators import spans
 from ..operators.canonicalize import canonical_entities, salted_counts
@@ -38,29 +50,16 @@ STAGES = ("mentions", "linked", "graph")
 def _dyn_overwrite(df: DataFrame, path: str,
                    files_per_bucket: int = 1,
                    n_buckets: int | None = None) -> None:
-    (
-        df.sparkSession.conf
-        .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    )
     # cluster rows by bucket before the partitioned write: without this a
     # 128-partition upstream writes up to 128 files into EVERY bucket dir
-    # (2048 tiny files, 4x the bytes from lost row-group clustering, and
-    # every downstream stage pays the open/footer cost; measured 97s -> 35s
-    # on the 20k-file stress).
-    #
-    # files_per_bucket=1 (default): one file per bucket — n_buckets is the
-    # resume granularity AND the write parallelism.  At scale the big
-    # relations stream makes that cap the dominant wall (the 1M-file run
-    # spends ~55% of stage-3 in this exchange+write), so files_per_bucket>1
-    # adds a doc-derived sub-bucket to the clustering key: write
-    # parallelism becomes ~n_buckets x files_per_bucket while resume
-    # granularity (the bucket dir) and row content are untouched.  The
-    # sub-bucket is xxhash64(doc_id)-derived — content-stable, so retries
-    # land rows in the same task and dynamic overwrite stays idempotent
-    # per bucket.  The partition count is EXPLICIT (n_buckets x
-    # files_per_bucket): an expression-only repartition lets AQE coalesce
-    # the shuffle read back down when partitions are small, silently
-    # undoing the sharding.
+    # (2048 tiny files, 4x the bytes; measured 97s -> 35s on the 20k-file
+    # stress).  files_per_bucket>1 adds a content-stable xxhash64(doc_id)
+    # sub-bucket to the key, so write parallelism is ~n_buckets x
+    # files_per_bucket (at 1M files the one-file-per-bucket write was ~55%
+    # of stage 3) while the resume granularity (the bucket dir), row
+    # content and per-bucket idempotence are untouched.  The partition
+    # count is EXPLICIT: an expression-only repartition lets AQE coalesce
+    # small partitions back down, silently undoing the sharding.
     if files_per_bucket > 1 and n_buckets is None:
         # a silent fall-through to the unsharded write would hand a caller
         # requesting sharding neither sharding nor an error (ADVICE r5)
@@ -76,14 +75,54 @@ def _dyn_overwrite(df: DataFrame, path: str,
         )
     else:
         clustered = df.repartition(F.col("bucket"))
-    clustered.write.mode("overwrite").partitionBy("bucket").parquet(path)
+    # a writer option: set on the session, dynamic mode would leak into
+    # every later partitioned overwrite
+    (clustered.write.mode("overwrite")
+     .option("partitionOverwriteMode", "dynamic")
+     .partitionBy("bucket").parquet(path))
 
 
-def _counts_by_bucket(df: DataFrame) -> dict[int, int]:
-    return {
-        r.bucket: r.n
-        for r in df.groupBy("bucket").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
+def _read_back(spark: SparkSession, path: str, df: DataFrame) -> DataFrame:
+    """The table ``df`` was written to, read with its writer's schema in
+    on-disk order (partition column last, all nullable), which is what a
+    schema-less read infers, minus the footer-inference job."""
+    fields = sorted(df.schema, key=lambda f: f.name == "bucket")
+    return spark.read.schema(StructType(
+        [StructField(f.name, f.dataType, True) for f in fields])).parquet(path)
+
+
+def verify_buckets(stage: str, written: DataFrame, inp: DataFrame,
+                   pending: list[int]) -> tuple[dict, dict, dict]:
+    """(rows_in, rows_out, sha_ok) per pending bucket, zero-row buckets
+    included, from ONE action over the stage input unioned with the rows
+    read back from the sink.  sha_ok: no written row carries a content_sha
+    outside the input's (mentions, graph); rows_in == rows_out for linked,
+    whose rows are one per mention (a broadcast join onto the link map)."""
+    def tagged(df: DataFrame, n_in: int, n_out: int,
+               n_foreign: int) -> DataFrame:
+        return df.where(F.col("bucket").isin(pending)).select(
+            "bucket", "content_sha", F.lit(n_in).alias("_in"),
+            F.lit(n_out).alias("_out"), F.lit(n_foreign).alias("_foreign"))
+
+    src = tagged(inp, 1, 0, 0)
+    out = tagged(written, 0, 1, 0)
+    # an anti join needs no distinct of the input shas (a left join does:
+    # one exchange and one job more)
+    foreign = tagged(out.join(src.select("content_sha"), "content_sha",
+                              "left_anti"), 0, 0, 1)
+    counts = dict.fromkeys(pending, (0, 0, 0))
+    counts.update(
+        (r.bucket, (r._in, r._out, r._foreign))
+        for r in src.unionByName(out).unionByName(foreign)
+        .groupBy("bucket")
+        .agg(*(F.sum(c).alias(c) for c in ("_in", "_out", "_foreign")))
+        .collect())
+    return (
+        {b: c[0] for b, c in counts.items()},
+        {b: c[1] for b, c in counts.items()},
+        {b: c[0] == c[1] if stage == "linked" else c[2] == 0
+         for b, c in counts.items()},
+    )
 
 
 def prepare_input(repos: DataFrame, n_buckets: int,
@@ -162,95 +201,67 @@ def run_kg_pipeline(
     same input and burns — task granularity, not IO bandwidth, is the
     cap.  Row content is identical under every setting.
     """
-    if files_per_bucket == "auto":
-        fpb = max(
-            1, 4 * spark.sparkContext.defaultParallelism // n_buckets)
-    else:
-        fpb = int(files_per_bucket)
+    fpb = (max(1, 4 * spark.sparkContext.defaultParallelism // n_buckets)
+           if files_per_bucket == "auto" else int(files_per_bucket))
     manifest_path = f"{out_dir}/manifest"
     src = prepare_input(repos, n_buckets, wide_ids=wide_ids).persist()
-    keep = ["doc_id", "bucket", "repo", "path", "commit", "lang", "content_sha"]
+    summary: dict = {"run_id": run_id, "stages": {}, "stage_walls": {},
+                     "manifest": 0}
+    written: dict[str, DataFrame] = {}  # tables written in this run
 
-    import time as _time
+    def table(name: str) -> DataFrame:
+        if name in written:
+            return written[name]
+        return spark.read.parquet(f"{out_dir}/{name}")
 
-    all_buckets = set(range(n_buckets))
-    summary: dict = {"run_id": run_id, "stages": {}, "stage_walls": {}}
-    _t0 = _time.time()
+    def stage(name: str, out_table: str, build) -> None:
+        """done -> write -> verify -> append for one stage.  ``build``
+        maps the pending buckets to (frame to write, stage input)."""
+        rows = mf.done_buckets(spark, manifest_path, run_id, name)
+        done = dict(rows) if resume else {}
+        pending = sorted(set(range(n_buckets)) - done.keys())
+        summary["manifest"] += len(rows)
+        summary["stages"][out_table] = sum(done.values())
+        if not pending:
+            return
+        out, inp = build(pending)
+        path = f"{out_dir}/{out_table}"
+        _dyn_overwrite(out, path, files_per_bucket=fpb, n_buckets=n_buckets)
+        written[out_table] = _read_back(spark, path, out)
+        rows_in, rows_out, sha_ok = verify_buckets(
+            name, written[out_table], inp, pending)
+        new = mf.stage_counters(run_id, name, rows_in, rows_out, sha_ok)
+        mf.append_rows(spark, manifest_path, new)
+        summary["manifest"] += len(new)
+        summary["stages"][out_table] += sum(rows_out.values())
 
-    # ---- stage 1: mentions -------------------------------------------------
-    done = mf.done_buckets(spark, manifest_path, run_id, "mentions") if resume else set()
-    pending = sorted(all_buckets - done)
-    if pending:
+    def build_mentions(pending):
         part = src.where(F.col("bucket").isin(pending))
-        if exact_parity:
-            # meta rides through the Arrow crossing (keep_cols) — the old
-            # join-back of the mention stream to a per-doc meta projection
-            # was a corpus-sized shuffle on both sides at scale
-            m = spans.extract_mentions_arrow(
-                part, text_col="content", id_col="doc_id",
-                sha_col="content_sha",
-                keep_cols=["bucket", "repo", "path", "commit", "lang"],
-            )
-        else:
-            m = spans.mentions(part, text_col="content", keep_cols=keep)
-        _dyn_overwrite(m, f"{out_dir}/mentions", files_per_bucket=fpb,
-                       n_buckets=n_buckets)
-        written = spark.read.parquet(f"{out_dir}/mentions").where(
-            F.col("bucket").isin(pending)
-        )
-        # seed zero rows for every pending bucket: a bucket with no docs
-        # (or no rows at a later stage) must still get its manifest row,
-        # else it stays "pending" forever and every resume reprocesses it
-        in_c = {b: 0 for b in pending} | _counts_by_bucket(part)
-        out_c = _counts_by_bucket(written)
-        # sha invariant: every mention's content_sha must exist in the input
-        bad = (
-            written.select("bucket", "content_sha").distinct()
-            .join(
-                src.select("content_sha").distinct(), "content_sha", "left_anti"
-            )
-        )
-        bad_b = {r.bucket for r in bad.select("bucket").distinct().collect()}
-        sha_ok = {b: b not in bad_b for b in pending}
-        mf.append_rows(
-            spark, manifest_path,
-            mf.stage_counters(run_id, "mentions", in_c, out_c, sha_ok),
-        )
-    mentions_df = spark.read.parquet(f"{out_dir}/mentions")
-    summary["stages"]["mentions"] = mentions_df.count()
-    summary["stage_walls"]["mentions"] = round(_time.time() - _t0, 2)
-    _t0 = _time.time()
+        meta = ["bucket", "repo", "path", "commit", "lang"]
+        if not exact_parity:
+            return spans.mentions(part, text_col="content", keep_cols=[
+                "doc_id", *meta, "content_sha"]), part
+        # meta rides through the Arrow crossing (keep_cols) — the old
+        # join-back of the mention stream to a per-doc meta projection
+        # was a corpus-sized shuffle on both sides at scale
+        return spans.extract_mentions_arrow(
+            part, text_col="content", id_col="doc_id",
+            sha_col="content_sha", keep_cols=meta), part
 
-    # ---- stage 2: linking --------------------------------------------------
-    done = mf.done_buckets(spark, manifest_path, run_id, "linked") if resume else set()
-    pending = sorted(all_buckets - done)
-    if pending:
-        part = mentions_df.where(F.col("bucket").isin(pending))
-        linked = link_mentions(part, spark, text_col="text")
-        _dyn_overwrite(linked, f"{out_dir}/linked",
-                       files_per_bucket=fpb, n_buckets=n_buckets)
-        in_c = {b: 0 for b in pending} | _counts_by_bucket(part)
-        out_c = _counts_by_bucket(
-            spark.read.parquet(f"{out_dir}/linked").where(
-                F.col("bucket").isin(pending))
-        )
-        sha_ok = {b: in_c.get(b, 0) == out_c.get(b, 0) for b in pending}
-        mf.append_rows(
-            spark, manifest_path,
-            mf.stage_counters(run_id, "linked", in_c, out_c, sha_ok),
-        )
-    linked_df = spark.read.parquet(f"{out_dir}/linked")
-    summary["stages"]["linked"] = linked_df.count()
-    summary["stage_walls"]["linked"] = round(_time.time() - _t0, 2)
-    _t0 = _time.time()
+    def build_linked(pending):
+        part = table("mentions").where(F.col("bucket").isin(pending))
+        return link_mentions(part, spark, text_col="text"), part
 
-    # ---- stage 3: canonicalize + triples + materialize ---------------------
-    done = mf.done_buckets(spark, manifest_path, run_id, "graph") if resume else set()
-    pending = sorted(all_buckets - done)
-    if pending:
+    def build_graph(pending):
+        linked_df = table("linked")
+        # the (cui -> canonical_id) map, a distinct + join, is referenced
+        # five times by the entities and relations plans: write it once
+        # next to the connected-components rounds
         canon = canonical_entities(
-            linked_df, spark, checkpoint_dir=f"{out_dir}/cc_rounds"
-        )
+            linked_df, spark, checkpoint_dir=f"{out_dir}/cc_rounds")
+        canon_path = f"{out_dir}/cc_rounds/canonical"
+        canon.write.mode("overwrite").parquet(canon_path)
+        canon = _read_back(spark, canon_path, canon)
         lm = linked_df.join(canon, "cui")
         # entities table: canonical id, surface stats (salted: hot surfaces)
         ent_counts = salted_counts(lm, "canonical_id").withColumnRenamed(
@@ -269,6 +280,8 @@ def run_kg_pipeline(
             .join(ent_counts, "canonical_id")
         )
         entities.write.mode("overwrite").parquet(f"{out_dir}/entities")
+        written["entities"] = _read_back(
+            spark, f"{out_dir}/entities", entities)
 
         docs_toks = spans.doc_tokens(
             src.select("doc_id", "bucket", "content_sha",
@@ -280,24 +293,17 @@ def run_kg_pipeline(
                       "start_position", "end_position"),
             scope_cols=["doc_id"],
         )
-        # re-attach canonical ids + sha for the relations table.  Mention
-        # start positions are unique per doc (span merge emits
-        # non-overlapping spans), so the per-doc (start -> canonical_id)
-        # MAP joins the triple stream ONCE on doc_id and resolves both
-        # endpoints with element_at — one shuffle of the (large) triple
-        # stream instead of two (doc_id, start) equi-joins.  The map rows
-        # are bounded by mentions-per-doc (<= max_seq_len).  The doc's
-        # bucket + content_sha ride along in the SAME one-row-per-doc
-        # aggregate (lm carries both, constant per doc), so there is no
-        # second corpus-sized join back to src: the triple stream — the
-        # largest stream in the pipeline — shuffles exactly once here.
-        # At test scale AQE broadcasts the map side either way; at 100 TB
-        # the dropped src join-back was a full extra shuffle.
-        # per-(doc, start) min first: under a 64-bit doc_id collision two
-        # documents share a group and would duplicate a start key, which
-        # map_from_entries turns into a stage-killing DUPLICATED_MAP_KEY —
-        # the deterministic min degrades to the documented cross-wire
-        # instead (and wide_ids=True avoids collisions entirely)
+        # re-attach canonical ids + sha: mention starts are unique per doc
+        # (span merge emits non-overlapping spans), so ONE per-doc
+        # (start -> canonical_id) map, carrying the doc's bucket and
+        # content_sha (constant per doc), joins the triple stream once on
+        # doc_id and resolves both endpoints with element_at.  The largest
+        # stream shuffles once: no second (doc_id, start) equi-join and no
+        # corpus-sized join back to src.  Per-(doc, start) min first: under
+        # a 64-bit doc_id collision two documents share a group, and a
+        # duplicate start key would be a stage-killing DUPLICATED_MAP_KEY;
+        # the min degrades to the documented cross-wire (wide_ids=True
+        # avoids collisions entirely)
         pos_entries = lm.groupBy("doc_id", "start_position").agg(
             F.min("canonical_id").alias("_cid"),
             F.min("bucket").alias("_bkt"),
@@ -319,32 +325,18 @@ def run_kg_pipeline(
                 "subj_type", "obj_type", "doc_id", "content_sha", "bucket",
             )
         )
-        _dyn_overwrite(rel, f"{out_dir}/relations",
-                       files_per_bucket=fpb, n_buckets=n_buckets)
-        in_c = {b: 0 for b in pending} | _counts_by_bucket(
-            linked_df.where(F.col("bucket").isin(pending)))
-        rel_written = spark.read.parquet(f"{out_dir}/relations").where(
-            F.col("bucket").isin(pending)
-        )
-        out_c = _counts_by_bucket(rel_written)
-        bad = rel_written.select("bucket", "content_sha").distinct().join(
-            src.select("content_sha").distinct(), "content_sha", "left_anti"
-        )
-        bad_b = {r.bucket for r in bad.select("bucket").distinct().collect()}
-        sha_ok = {b: b not in bad_b for b in pending}
-        mf.append_rows(
-            spark, manifest_path,
-            mf.stage_counters(run_id, "graph", in_c, out_c, sha_ok),
-        )
-    summary["stages"]["relations"] = spark.read.parquet(
-        f"{out_dir}/relations"
-    ).count()
-    summary["stages"]["entities"] = spark.read.parquet(
-        f"{out_dir}/entities"
-    ).count()
-    summary["stage_walls"]["graph"] = round(_time.time() - _t0, 2)
-    summary["manifest"] = mf.read_manifest(spark, manifest_path).where(
-        F.col("run_id") == run_id
-    ).count()
-    src.unpersist()
+        return rel, linked_df
+
+    try:
+        for name, out_table, build in (
+                ("mentions", "mentions", build_mentions),
+                ("linked", "linked", build_linked),
+                ("graph", "relations", build_graph)):
+            t0 = time.time()
+            stage(name, out_table, build)
+            if name == "graph":
+                summary["stages"]["entities"] = table("entities").count()
+            summary["stage_walls"][name] = round(time.time() - t0, 2)
+    finally:
+        src.unpersist()
     return summary

@@ -14,7 +14,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import DataType, StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -73,6 +76,15 @@ def get_spark(
     return b.getOrCreate()
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    """Read one driver-provided parquet table (TESTDATA.md)."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+def driver_frame(spark: SparkSession, rows: list[tuple],
+                 schema: str | StructType) -> DataFrame:
+    """``createDataFrame(rows, schema)`` shipped as one ``pyarrow.Table``:
+    a JVM-side local relation instead of a pickled Python RDD, so no job
+    that scans it starts a Python worker.  The schema is the same."""
+    st = schema if isinstance(schema, StructType) else DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(st)
+    cols = list(zip(*rows)) if rows else [()] * len(st.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, st)

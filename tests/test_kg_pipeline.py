@@ -17,9 +17,52 @@ def repos(spark):
     return synthesize_repos(spark, n_files=300, seed=42)
 
 
-def test_pipeline_runs_and_sha_invariant(spark, repos, tmp_path_factory):
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+def _count_jobs(spark, group, fn):
+    """(fn(), number of Spark jobs fn submitted), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture(scope="module")
+def built(spark, repos, tmp_path_factory):
+    """One fresh 4-bucket build of the 300-file corpus and a no-op resume
+    of it, each under its own job group, with the session's partition
+    overwrite mode read around the build."""
     out = str(tmp_path_factory.mktemp("kg_out"))
-    summary = run_kg_pipeline(spark, repos, out, run_id="t1", n_buckets=4)
+    conf_before = spark.conf.get(_OVERWRITE_MODE)
+    spark.conf.set(_OVERWRITE_MODE, "static")
+    try:
+        summary, jobs = _count_jobs(
+            spark, "kg_fresh",
+            lambda: run_kg_pipeline(spark, repos, out, run_id="t1",
+                                    n_buckets=4))
+        conf_after = spark.conf.get(_OVERWRITE_MODE)
+    finally:
+        spark.conf.set(_OVERWRITE_MODE, conf_before)
+    resumed, resume_jobs = _count_jobs(
+        spark, "kg_noop_resume",
+        lambda: run_kg_pipeline(spark, repos, out, run_id="t1", n_buckets=4))
+    return {"out": out, "summary": summary, "jobs": jobs,
+            "resumed": resumed, "resume_jobs": resume_jobs,
+            "conf_after": conf_after}
+
+
+def _table_counts(spark, out):
+    return {t: spark.read.parquet(f"{out}/{t}").count()
+            for t in ("mentions", "linked", "relations", "entities")}
+
+
+def test_pipeline_runs_and_sha_invariant(spark, repos, built):
+    out, summary = built["out"], built["summary"]
     assert summary["stages"]["mentions"] > 0
     assert summary["stages"]["relations"] > 0
     assert summary["stages"]["entities"] > 0
@@ -37,12 +80,184 @@ def test_pipeline_runs_and_sha_invariant(spark, repos, tmp_path_factory):
     assert m.where(~F.col("sha_ok")).count() == 0
     assert m.select("stage").distinct().count() == 3
     assert m.count() == 12  # 3 stages x 4 buckets
+    # the totals come from the verification and the manifest, not from a
+    # re-count, and must still equal the tables; the no-op resume takes
+    # them from the manifest rows alone
+    counts = _table_counts(spark, out)
+    assert summary["stages"] == counts
+    assert built["resumed"]["stages"] == counts
+    assert summary["manifest"] == built["resumed"]["manifest"] == 12
 
 
-def test_pipeline_resume_produces_identical_output(spark, repos,
+def test_pipeline_leaves_session_overwrite_mode_alone(built):
+    """Dynamic partition overwrite is a writer option: a session-wide
+    setting would turn every later partitioned overwrite in the session
+    into a per-partition one."""
+    assert built["conf_after"] == "static"
+
+
+def test_pipeline_job_counts(built):
+    """Driver round-trips per run, counted through statusTracker, with a
+    few jobs of headroom.  Measured on local[8]: 48 jobs for the fresh
+    build (79 when every stage re-counted its buckets, ran a three-job
+    sha anti-join and re-read the totals) and 6 for the no-op resume
+    (was 24): three manifest reads and the entities count."""
+    assert 0 < built["jobs"] <= 51, built["jobs"]
+    assert 0 < built["resume_jobs"] <= 8, built["resume_jobs"]
+
+
+def _reference_manifest(spark, repos, out):
+    """The per-bucket counts and sha anti-joins the pipeline ran before it
+    had one verification action per stage, recomputed from the written
+    tables."""
+    def by_bucket(df):
+        return {r.bucket: r.n for r in
+                df.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
+                .collect()}
+
+    def foreign_buckets(df, shas):
+        bad = df.select("bucket", "content_sha").distinct().join(
+            shas.select("content_sha").distinct(), "content_sha",
+            "left_anti")
+        return {r.bucket for r in bad.select("bucket").distinct().collect()}
+
+    src = prepare_input(repos, 4)
+    tables = {t: spark.read.parquet(f"{out}/{t}")
+              for t in ("mentions", "linked", "relations")}
+    stages = {
+        "mentions": (src, tables["mentions"]),
+        "linked": (tables["mentions"], tables["linked"]),
+        "graph": (tables["linked"], tables["relations"]),
+    }
+    ref = {}
+    for stage, (inp, written) in stages.items():
+        n_in, n_out = by_bucket(inp), by_bucket(written)
+        bad = foreign_buckets(written, src)
+        for b in range(4):
+            ok = (n_in.get(b, 0) == n_out.get(b, 0) if stage == "linked"
+                  else b not in bad)
+            ref[(stage, b)] = (n_in.get(b, 0), n_out.get(b, 0), ok)
+    return ref
+
+
+def test_manifest_equals_reference_counts(spark, repos, built):
+    man = mf.read_manifest(spark, f"{built['out']}/manifest").collect()
+    got = {(r.stage, r.bucket): (r.rows_in, r.rows_out, r.sha_ok)
+           for r in man}
+    assert got == _reference_manifest(spark, repos, built["out"])
+
+
+def _tampered_sink(spark, df, path):
+    df.write.partitionBy("bucket").parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_verify_buckets_foreign_sha_fails_only_its_bucket(
+        spark, built, tmp_path):
+    from biomedical_ner_spark.plans.kg_pipeline import verify_buckets
+
+    mentions = spark.read.parquet(f"{built['out']}/mentions")
+    k = 2
+    first = mentions.where(F.col("bucket") == k).limit(1)
+    forged = first.withColumn("content_sha", F.lit("f" * 64))
+    sink = _tampered_sink(
+        spark, mentions.unionByName(forged), str(tmp_path / "mentions"))
+    src = spark.read.parquet(f"{built['out']}/mentions")
+    rows_in, rows_out, sha_ok = verify_buckets(
+        "mentions", sink, src, [0, 1, 2, 3])
+    assert sha_ok == {0: True, 1: True, 2: False, 3: True}
+    assert rows_out[k] == rows_in[k] + 1
+
+
+def test_verify_buckets_dropped_linked_row(spark, built, tmp_path):
+    from biomedical_ner_spark.plans.kg_pipeline import verify_buckets
+
+    linked = spark.read.parquet(f"{built['out']}/linked")
+    mentions = spark.read.parquet(f"{built['out']}/mentions")
+    k = 1
+    victim = linked.where(F.col("bucket") == k).limit(1)
+    sink = _tampered_sink(
+        spark, linked.exceptAll(victim), str(tmp_path / "linked"))
+    rows_in, rows_out, sha_ok = verify_buckets(
+        "linked", sink, mentions, [0, 1, 2, 3])
+    assert rows_in[k] == rows_out[k] + 1
+    assert sha_ok == {0: True, 1: False, 2: True, 3: True}
+
+
+def test_verify_buckets_empty_pending_bucket_gets_row(
+        spark, built, tmp_path):
+    from biomedical_ner_spark.plans.kg_pipeline import verify_buckets
+
+    mentions = spark.read.parquet(f"{built['out']}/mentions")
+    sink = _tampered_sink(
+        spark, mentions.where(F.col("bucket") != 3),
+        str(tmp_path / "mentions"))
+    src = spark.read.parquet(f"{built['out']}/mentions")
+    rows_in, rows_out, sha_ok = verify_buckets(
+        "graph", sink, src.where(F.col("bucket") != 3), [0, 3, 7])
+    assert set(rows_in) == set(rows_out) == set(sha_ok) == {0, 3, 7}
+    assert rows_in[0] == rows_out[0] > 0
+    assert (rows_in[3], rows_out[3], sha_ok[3]) == (0, 0, True)
+    assert (rows_in[7], rows_out[7], sha_ok[7]) == (0, 0, True)
+
+
+def test_resume_false_twice_totals_equal_table_counts(
+        spark, repos, tmp_path_factory):
+    """resume=False into a reused directory appends a second manifest row
+    per bucket: the totals must still equal the tables, and a later
+    resume=True must take each done bucket's rows_out once."""
+    out = str(tmp_path_factory.mktemp("kg_rerun"))
+    for n in (1, 2):
+        s = run_kg_pipeline(spark, repos, out, run_id="rr", n_buckets=4,
+                            resume=False)
+        assert s["stages"] == _table_counts(spark, out)
+        assert s["manifest"] == 12 * n
+    resumed = run_kg_pipeline(spark, repos, out, run_id="rr", n_buckets=4)
+    assert resumed["stages"] == s["stages"]
+    assert resumed["manifest"] == mf.read_manifest(
+        spark, f"{out}/manifest").count() == 24
+
+
+def test_failed_stage_releases_cached_frames(spark, monkeypatch,
+                                             tmp_path_factory):
+    """A stage that raises must not leave the corpus cached."""
+    from biomedical_ner_spark.plans import kg_pipeline
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("link stage failed")
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(kg_pipeline, "link_mentions", boom)
+    out = str(tmp_path_factory.mktemp("kg_fail"))
+    with pytest.raises(RuntimeError, match="link stage failed"):
+        run_kg_pipeline(spark, synthesize_repos(spark, n_files=20, seed=3),
+                        out, n_buckets=2)
+    # stage 1 ran, so the corpus was materialized in the cache
+    assert mf.read_manifest(spark, f"{out}/manifest").count() == 2
+    assert jsc.getPersistentRDDs().size() == before
+
+
+@pytest.mark.parametrize("rows, schema", [
+    ([], "a STRING, b BIGINT"),
+    ([("x", None, [1.5, None]), (None, 2**40, None), ("z", -1, [])],
+     "a STRING, b BIGINT, v ARRAY<FLOAT>"),
+])
+def test_driver_frame_matches_create_dataframe(spark, rows, schema):
+    from biomedical_ner_spark.session import driver_frame
+
+    got = driver_frame(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    # a JVM-side local relation: no Python RDD behind the frame
+    plan = got._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+
+
+def test_pipeline_resume_produces_identical_output(spark, repos, built,
                                                    tmp_path_factory):
-    out_full = str(tmp_path_factory.mktemp("kg_full"))
-    run_kg_pipeline(spark, repos, out_full, run_id="r", n_buckets=4)
+    out_full = built["out"]
 
     # simulate a crash after the mentions stage of buckets {0,1}: run the
     # mentions stage only for those buckets by pre-seeding the manifest of a
@@ -56,10 +271,8 @@ def test_pipeline_resume_produces_identical_output(spark, repos,
         part, text_col="content", id_col="doc_id", sha_col="content_sha"
     ).join(src.select("doc_id", "bucket", "repo", "path", "commit", "lang"),
            "doc_id")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    m.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{out_part}/mentions"
-    )
+    m.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("bucket").parquet(f"{out_part}/mentions")
     mf.append_rows(
         spark, f"{out_part}/manifest",
         mf.stage_counters("r", "mentions", {0: 1, 1: 1}, {0: 1, 1: 1},
@@ -129,7 +342,7 @@ def test_connected_components_vs_union_find(spark):
 
 
 def test_pipeline_resume_overwrites_partial_bucket_writes(
-        spark, repos, tmp_path_factory):
+        spark, repos, built, tmp_path_factory):
     """Mid-WRITE crash: a bucket directory containing garbage partial
     parquet from a killed task, with the bucket NOT recorded done in the
     manifest, must be replaced wholesale on resume (dynamic partition
@@ -137,8 +350,7 @@ def test_pipeline_resume_overwrites_partial_bucket_writes(
     clean run's."""
     import os
 
-    out_full = str(tmp_path_factory.mktemp("kg_full2"))
-    run_kg_pipeline(spark, repos, out_full, run_id="r", n_buckets=4)
+    out_full = built["out"]
 
     out_crash = str(tmp_path_factory.mktemp("kg_crash"))
     src = prepare_input(repos, 4)
@@ -150,9 +362,8 @@ def test_pipeline_resume_overwrites_partial_bucket_writes(
         part, text_col="content", id_col="doc_id", sha_col="content_sha"
     ).join(src.select("doc_id", "bucket", "repo", "path", "commit", "lang"),
            "doc_id")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    m.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{out_crash}/mentions")
+    m.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("bucket").parquet(f"{out_crash}/mentions")
     mf.append_rows(
         spark, f"{out_crash}/manifest",
         mf.stage_counters("r", "mentions", {0: 1, 1: 1}, {0: 1, 1: 1},
@@ -161,8 +372,9 @@ def test_pipeline_resume_overwrites_partial_bucket_writes(
     # ...then simulate a crash halfway through bucket 2's write: write
     # GARBAGE rows (wrong mentions) into its partition dir, no manifest row
     garbage = m.limit(7).withColumn("bucket", F.lit(2))
-    garbage.write.mode("overwrite").partitionBy("bucket").parquet(
-        f"{out_crash}/mentions")
+    garbage.write.mode("overwrite") \
+        .option("partitionOverwriteMode", "dynamic") \
+        .partitionBy("bucket").parquet(f"{out_crash}/mentions")
     assert os.path.isdir(f"{out_crash}/mentions/bucket=2")
 
     run_kg_pipeline(spark, repos, out_crash, run_id="r", n_buckets=4)
