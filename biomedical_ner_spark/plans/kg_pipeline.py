@@ -17,7 +17,9 @@ Invariants & ops story:
     rows_in, rows_out and sha_ok per bucket; one manifest row per pending
     bucket, empty ones included, is appended.
   * resumable: work is hash-bucketed by (repo, path, commit); a restart
-    recomputes only buckets missing their manifest row.  Stage totals are
+    recomputes only buckets missing their manifest row (the graph stage
+    recomputes the global canonical map and entities table, but writes
+    relations for its pending buckets only).  Stage totals are
     the verified rows_out plus the manifest rows_out of skipped buckets, so
     no table is re-counted; a table written in this run is read back with
     its writer's schema (no footer-inference job).
@@ -41,6 +43,7 @@ from ..operators import spans
 from ..operators.canonicalize import canonical_entities, salted_counts
 from ..operators.linking import link_mentions
 from ..operators.triples import triples as make_triples
+from ..session import codegen_compiles
 from ..sources.repos import with_content_sha
 from . import manifest as mf
 
@@ -200,13 +203,20 @@ def run_kg_pipeline(
     n_buckets tasks: 17.6-43 s at 32 tasks vs 7.6-8.6 s at 128 on the
     same input and burns — task granularity, not IO bandwidth, is the
     cap.  Row content is identical under every setting.
+
+    The summary holds the stage totals (``stages``), the manifest row
+    count, and per stage its wall seconds (``stage_walls``) and its Janino
+    compilations of generated code (``stage_compiles``; near zero once the
+    session has run the same plans).  The compile count is read from a
+    JVM-wide metric, so another session running concurrently in the same
+    JVM adds its compilations to it.
     """
     fpb = (max(1, 4 * spark.sparkContext.defaultParallelism // n_buckets)
            if files_per_bucket == "auto" else int(files_per_bucket))
     manifest_path = f"{out_dir}/manifest"
     src = prepare_input(repos, n_buckets, wide_ids=wide_ids).persist()
     summary: dict = {"run_id": run_id, "stages": {}, "stage_walls": {},
-                     "manifest": 0}
+                     "stage_compiles": {}, "manifest": 0}
     written: dict[str, DataFrame] = {}  # tables written in this run
 
     def table(name: str) -> DataFrame:
@@ -263,6 +273,10 @@ def run_kg_pipeline(
         canon.write.mode("overwrite").parquet(canon_path)
         canon = _read_back(spark, canon_path, canon)
         lm = linked_df.join(canon, "cui")
+        # the map and the entities are global; the triples read only the
+        # pending buckets, so a resume rewrites no done relations bucket
+        in_pending = F.col("bucket").isin(pending)
+        lm_pending = lm.where(in_pending)
         # entities table: canonical id, surface stats (salted: hot surfaces)
         ent_counts = salted_counts(lm, "canonical_id").withColumnRenamed(
             "n", "n_mentions"
@@ -284,13 +298,14 @@ def run_kg_pipeline(
             spark, f"{out_dir}/entities", entities)
 
         docs_toks = spans.doc_tokens(
-            src.select("doc_id", "bucket", "content_sha",
-                       F.col("content").alias("text"))
+            src.where(in_pending).select(
+                "doc_id", "bucket", "content_sha",
+                F.col("content").alias("text"))
         ).select("doc_id", "bucket", "content_sha", "tokens")
         trip = make_triples(
             docs_toks,
-            lm.select("doc_id", "text", "type",
-                      "start_position", "end_position"),
+            lm_pending.select("doc_id", "text", "type",
+                              "start_position", "end_position"),
             scope_cols=["doc_id"],
         )
         # re-attach canonical ids + sha: mention starts are unique per doc
@@ -304,7 +319,7 @@ def run_kg_pipeline(
         # duplicate start key would be a stage-killing DUPLICATED_MAP_KEY;
         # the min degrades to the documented cross-wire (wide_ids=True
         # avoids collisions entirely)
-        pos_entries = lm.groupBy("doc_id", "start_position").agg(
+        pos_entries = lm_pending.groupBy("doc_id", "start_position").agg(
             F.min("canonical_id").alias("_cid"),
             F.min("bucket").alias("_bkt"),
             F.min("content_sha").alias("_sha"))
@@ -332,11 +347,12 @@ def run_kg_pipeline(
                 ("mentions", "mentions", build_mentions),
                 ("linked", "linked", build_linked),
                 ("graph", "relations", build_graph)):
-            t0 = time.time()
+            t0, c0 = time.time(), codegen_compiles(spark)
             stage(name, out_table, build)
             if name == "graph":
                 summary["stages"]["entities"] = table("entities").count()
             summary["stage_walls"][name] = round(time.time() - t0, 2)
+            summary["stage_compiles"][name] = codegen_compiles(spark) - c0
     finally:
         src.unpersist()
     return summary

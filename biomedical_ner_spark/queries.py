@@ -405,14 +405,17 @@ def q_encoded_tokens(spark, sf_dir):
     # inventory) scan it, and without the cache the tokenize lineage
     # executes once per dim (the frame is token-stream-sized but its
     # aggregates materialize it during the gate's collect, so the cache is
-    # populated exactly once; Spark LRU-evicts it afterwards).  Token-ONLY:
-    # neither dim reads tags, and Catalyst does not prune the BIO CASE
-    # out of a persisted bio_tags_exploded frame (_tokens_only).
+    # populated exactly once).  Token-ONLY: neither dim reads tags, and
+    # Catalyst does not prune the BIO CASE out of a persisted
+    # bio_tags_exploded frame (_tokens_only).
     tags = _tokens_only(spark, sf_dir).persist()
     # size-gated: dict closure at reference vocab sizes, dim-frame joins
     # beyond CLOSURE_VOCAB_MAX (nothing vocabulary-sized on the driver)
     enc = encode_corpus(_docs(spark, sf_dir), stats.vocab_build(tags),
                         stats.char_inventory(tags))
+    # both gate collects have run: the closure plan reads only _docs, and
+    # the join plan recomputes the dims from the lineage
+    tags.unpersist()
     # driver-compare convention: scalar columns only — arrays stay in the
     # pipeline (the driver's cross-engine array stringification is not part
     # of the contract); the char-id sequence is carried as a fingerprint
@@ -465,6 +468,7 @@ def q_vocab_sink(spark, sf_dir):
     path = _scratch("vocab_sink", sf_dir)
     write_vocab_tables(stats.vocab_build(tags), stats.char_inventory(tags),
                        stats.tag_map(tags), path)
+    tags.unpersist()  # the writes were eager; the result reads the parquet
     v = spark.read.parquet(f"{path}/vocab").select(
         F.lit("vocab").alias("dim"), F.col("word").alias("key"),
         F.col("id").cast("bigint").alias("id"))

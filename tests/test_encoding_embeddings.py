@@ -190,3 +190,17 @@ def test_encode_corpus_closure_and_join_paths_agree(spark):
     assert wid == 1
     assert by_tok[(3, 0)][1] == 1       # non-ASCII digits: UNK, not <NUM>
     assert by_tok[(3, 2)][1] == 2       # ASCII '7' -> <NUM> on both paths
+
+
+@pytest.mark.parametrize("name", ["encoded_tokens", "vocab_sink"])
+def test_query_releases_persisted_token_frame(spark, name):
+    """The two registry queries that persist a token frame for their dim
+    builds release it: a session serving them repeatedly must not gather
+    one cached frame per call."""
+    from biomedical_ner_spark import queries as Q
+    from tests.conftest import SF_SMALL
+
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    assert Q.queries()[name](spark, SF_SMALL).count() > 0
+    assert jsc.getPersistentRDDs().size() == before

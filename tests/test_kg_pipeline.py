@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from biomedical_ner_spark.operators.canonicalize import connected_components
 from biomedical_ner_spark.plans import manifest as mf
 from biomedical_ner_spark.plans.kg_pipeline import prepare_input, run_kg_pipeline
+from biomedical_ner_spark.session import codegen_compiles
 from biomedical_ner_spark.sources.repos import synthesize_repos
 
 
@@ -54,6 +55,19 @@ def built(spark, repos, tmp_path_factory):
     return {"out": out, "summary": summary, "jobs": jobs,
             "resumed": resumed, "resume_jobs": resume_jobs,
             "conf_after": conf_after}
+
+
+def _assert_same_tables(spark, out_a, out_b, tables):
+    """Each table holds the same columns and the same multiset of rows in
+    both output directories."""
+    for table in tables:
+        a = spark.read.parquet(f"{out_a}/{table}")
+        b = spark.read.parquet(f"{out_b}/{table}")
+        cols = sorted(a.columns)
+        assert sorted(b.columns) == cols, table
+        assert a.count() == b.count(), table
+        assert a.select(cols).exceptAll(b.select(cols)).count() == 0, table
+        assert b.select(cols).exceptAll(a.select(cols)).count() == 0, table
 
 
 def _table_counts(spark, out):
@@ -205,13 +219,22 @@ def test_resume_false_twice_totals_equal_table_counts(
         spark, repos, tmp_path_factory):
     """resume=False into a reused directory appends a second manifest row
     per bucket: the totals must still equal the tables, and a later
-    resume=True must take each done bucket's rows_out once."""
+    resume=True must take each done bucket's rows_out once.
+
+    The second run repeats the first one's plans, so the session's codegen
+    cache must serve it: at Spark's default of 100 entries it recompiled
+    most of its generated classes (179 of them on local[8])."""
     out = str(tmp_path_factory.mktemp("kg_rerun"))
     for n in (1, 2):
+        c0 = codegen_compiles(spark)
         s = run_kg_pipeline(spark, repos, out, run_id="rr", n_buckets=4,
                             resume=False)
+        compiles = codegen_compiles(spark) - c0
         assert s["stages"] == _table_counts(spark, out)
         assert s["manifest"] == 12 * n
+        assert set(s["stage_compiles"]) == {"mentions", "linked", "graph"}
+        assert sum(s["stage_compiles"].values()) <= compiles
+    assert compiles <= 20, compiles
     resumed = run_kg_pipeline(spark, repos, out, run_id="rr", n_buckets=4)
     assert resumed["stages"] == s["stages"]
     assert resumed["manifest"] == mf.read_manifest(
@@ -281,14 +304,7 @@ def test_pipeline_resume_produces_identical_output(spark, repos, built,
     # resume: completes buckets 2,3 for mentions + all later stages
     run_kg_pipeline(spark, repos, out_part, run_id="r", n_buckets=4)
 
-    for table in ("relations", "entities"):
-        a = spark.read.parquet(f"{out_full}/{table}")
-        b = spark.read.parquet(f"{out_part}/{table}")
-        cols = sorted(a.columns)
-        assert sorted(b.columns) == cols
-        assert a.count() == b.count()
-        assert a.select(cols).exceptAll(b.select(cols)).count() == 0
-        assert b.select(cols).exceptAll(a.select(cols)).count() == 0
+    _assert_same_tables(spark, out_full, out_part, ("relations", "entities"))
 
     # no duplicate manifest cells for completed buckets
     man = mf.read_manifest(spark, f"{out_part}/manifest")
@@ -297,6 +313,51 @@ def test_pipeline_resume_produces_identical_output(spark, repos, built,
         .count().where(F.col("count") > 1)
     )
     assert dup.count() == 0
+
+
+def _bucket_files(path):
+    """{bucket dir: its file names} of a partitioned table; a rewritten
+    bucket gets new names (each write job tags its files with its id)."""
+    import os
+
+    return {d: set(os.listdir(os.path.join(path, d)))
+            for d in os.listdir(path) if d.startswith("bucket=")}
+
+
+def test_graph_resume_rewrites_only_pending_buckets(
+        spark, repos, built, tmp_path_factory):
+    """A run killed during the graph stage: buckets 0 and 1 have their
+    graph manifest rows, 2 and 3 do not.  The resume must leave the done
+    relations buckets' files alone, rewrite the pending ones, and end
+    with the fresh build's relations and entities."""
+    import os
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path_factory.mktemp("kg_graph_part") / "out")
+    shutil.copytree(built["out"], out)
+    man_dir = f"{out}/manifest"
+    man = ds.dataset(man_dir, format="parquet").to_table()
+    killed = pc.and_(pc.equal(man["stage"], "graph"),
+                     pc.greater_equal(man["bucket"], 2))
+    shutil.rmtree(man_dir)
+    os.makedirs(man_dir)
+    pq.write_table(man.filter(pc.invert(killed)),
+                   f"{man_dir}/part-00000.parquet")
+    before = _bucket_files(f"{out}/relations")
+
+    run_kg_pipeline(spark, repos, out, run_id="t1", n_buckets=4)
+
+    after = _bucket_files(f"{out}/relations")
+    assert set(after) == set(before)
+    for b in ("bucket=0", "bucket=1"):
+        assert after[b] == before[b], b
+    for b in ("bucket=2", "bucket=3"):
+        assert after[b].isdisjoint(before[b]), b
+    _assert_same_tables(spark, built["out"], out, ("relations", "entities"))
 
 
 def test_connected_components_vs_union_find(spark):
@@ -379,13 +440,8 @@ def test_pipeline_resume_overwrites_partial_bucket_writes(
 
     run_kg_pipeline(spark, repos, out_crash, run_id="r", n_buckets=4)
 
-    for table in ("mentions", "relations", "entities"):
-        a = spark.read.parquet(f"{out_full}/{table}")
-        b = spark.read.parquet(f"{out_crash}/{table}")
-        cols = sorted(a.columns)
-        assert a.count() == b.count(), table
-        assert a.select(cols).exceptAll(b.select(cols)).count() == 0, table
-        assert b.select(cols).exceptAll(a.select(cols)).count() == 0, table
+    _assert_same_tables(spark, out_full, out_crash,
+                        ("mentions", "relations", "entities"))
 
 
 def test_py_files_packaging_and_spark_submit(tmp_path):
