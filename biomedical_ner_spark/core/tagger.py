@@ -26,7 +26,6 @@ import numpy as np
 from ..lexicon import ENTITY_TYPES, tag_token
 
 TAGSET = ["O"] + [p + t for t in ENTITY_TYPES for p in ("B-", "I-")]
-TAG_TO_IDX = {t: i for i, t in enumerate(TAGSET)}
 
 
 class GazetteerTagger:

@@ -35,16 +35,6 @@ def tokenize_expr(col: str | Column) -> Column:
     return F.regexp_extract_all(c, F.lit(SQL_TOKEN_PATTERN), 0)
 
 
-def tokenize_sql(col: str) -> str:
-    """Same tokenizer as raw SQL text (works in Spark SQL and DuckDB)."""
-    return f"regexp_extract_all({col}, '{SQL_TOKEN_PATTERN}')"
-
-
-def is_digit_expr(col: Column) -> Column:
-    """SQL twin of Python str.isdigit for ASCII tokens (app.py:229)."""
-    return col.rlike("^[0-9]+$")
-
-
 def punct_ratio_expr(tokens: Column) -> Column:
     """Fraction of tokens that are punctuation.
 

@@ -414,30 +414,3 @@ def balance_ner_dataset_py(rows: list[tuple[int, list[str], list[str]]],
             continue
         kept.append((d, ci, t, l))
     return kept
-
-
-def balance_dataset(sentences: DataFrame, spark: SparkSession,
-                    max_copies: int = 3,
-                    replace_prob: float = 0.3) -> DataFrame:
-    """A13 + driver loop: compute per-class deficits vs the median class
-    count (reference boosts rare classes toward the median,
-    utils/fonctionsFaxtText.py:694-768) and augment sentences containing
-    deficient classes; returns original ∪ augmented rows."""
-    counts = {r.cls: r.n for r in class_counts(sentences).collect()}
-    if not counts:
-        return sentences.withColumn("copy_idx", F.lit(-1).cast("int"))
-    med = sorted(counts.values())[len(counts) // 2]
-    deficient = [c for c, n in counts.items() if n < med]
-    base = sentences.withColumn("copy_idx", F.lit(-1).cast("int"))
-    if not deficient:
-        return base
-    has_deficient = F.arrays_overlap(
-        F.expr("transform(filter(labels, l -> l LIKE 'B-%'),"
-               " l -> substr(l, 3))"),
-        F.array(*[F.lit(c) for c in deficient]),
-    )
-    todo = sentences.where(has_deficient)
-    aug = augment_sentences(
-        todo, spark, n_copies=max_copies, replace_prob=replace_prob
-    )
-    return base.unionByName(aug.select(base.columns))

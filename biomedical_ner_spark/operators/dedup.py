@@ -211,11 +211,12 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", n: int = 3,
         # stream here is ~50x the shingle stream (sum of df^2/2; 127M at
         # sf1.0) and the expand's nested-transform lambdas are
         # interpreted per pair struct — measured same-session r06 A/B
-        # (scripts/ab_ngram.py): group-expand 36.5 s vs self-join-with-
-        # sizes 24.1 s vs r5 4-evaluation shape 25.8 s.  The size-ratio
-        # prefilter is EXACT: jaccard <= min(sz)/max(sz), so pairs with
-        # min < t*max can never pass the threshold and their instances
-        # are dropped before the aggregation (best 23.8 s).
+        # (OPTIMIZATION_r06.md, ngram_jaccard): group-expand 36.5 s vs
+        # self-join-with-sizes 24.1 s vs r5 4-evaluation shape 25.8 s.
+        # The size-ratio prefilter is EXACT: jaccard <= min(sz)/max(sz),
+        # so pairs with min < t*max can never pass the threshold and
+        # their instances are dropped before the aggregation (best
+        # 23.8 s).
         a = sh.select(F.col("doc_id").alias("a"),
                       F.col("sz").alias("sz_a"), "shingle")
         b = sh.select(F.col("doc_id").alias("b"),
@@ -269,28 +270,15 @@ def ngram_jaccard_pairs(docs: DataFrame, text_col: str = "text", n: int = 3,
     )
 
 
-def minhash_signatures(docs: DataFrame, text_col: str = "text", n: int = 3,
-                       n_hashes: int = N_BANDS * ROWS_PER_BAND) -> DataFrame:
-    """(doc_id, hash_idx, minhash): per hash function h_i, the minimum of
-    md5(i || shingle) over the doc's shingles.  md5-hex min is a valid
-    min-wise hash and is engine-portable for the DuckDB oracle.
-
-    Shape: see minhash_signatures_wide; this is its stack() unpivot."""
-    per_doc = minhash_signatures_wide(docs, text_col, n, n_hashes)
-    stack_args = ", ".join(f"{i}, h{i}" for i in range(n_hashes))
-    return per_doc.selectExpr(
-        "doc_id",
-        f"stack({n_hashes}, {stack_args}) AS (hash_idx, minhash)",
-    )
-
-
 def minhash_signatures_wide(docs: DataFrame, text_col: str = "text",
                             n: int = 3,
                             n_hashes: int = N_BANDS * ROWS_PER_BAND
                             ) -> DataFrame:
     """(doc_id, h0..h{n_hashes-1}): one row per doc with every min-hash as
     a column — the internal shape the banding consumes without any
-    explode/regroup.
+    explode/regroup.  h_i is the minimum of md5(i || shingle) over the
+    doc's shingles: md5-hex min is a valid min-wise hash and is
+    engine-portable for the DuckDB oracle.
 
     All n_hashes md5s are computed INLINE on the doc-shingle stream
     (shingles are already distinct per doc via _shingles), then ONE

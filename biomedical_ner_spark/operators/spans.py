@@ -1,29 +1,24 @@
 """Mention detection: tokenize -> BIO tag -> span merge (SURVEY.md W1).
 
 Reference semantics: app.py:210-214 (tokenize), app.py:335-416 (span merge
-with orphan-I promotion + trailing flush).  Three implementations, all
-verified to produce identical mention sets (tests + 114k-mention agreement
-at sf0.1):
+with orphan-I promotion + trailing flush).  Two implementations, both
+pinned to ``core.oracle.run_reference_pipeline`` by the tests:
 
-1. **`mentions` (DEFAULT, window/groupBy form)**: tags computed array-side
-   (narrow map-literal lookups), then posexplode -> running-sum window ->
-   groupBy (doc_id, span_id).  Window and groupBy both cluster on doc_id so
-   Catalyst plans exactly ONE exchange; everything is whole-stage codegen.
-   Measured fastest (12s vs 19s arrow vs 192s HOF at sf0.1/local[8]).
+1. **`mentions` (window/groupBy) — the registry queries**: tags computed
+   array-side (narrow map-literal lookups), then posexplode -> running-sum
+   window -> groupBy (doc_id, span_id).  Window and groupBy both cluster on
+   doc_id so Catalyst plans exactly ONE exchange; all whole-stage codegen.
+   ASCII-explicit SQL tokenizer, so it has a DuckDB twin
+   (`bio_spans_window_sql`) and is exact on ASCII corpora.
 
-2. **`extract_mentions_arrow` (exact-parity path)**: fused mapInPandas
-   running the *exact* Python-re tokenizer + shared tagger + transcribed
-   span merge from ``core.oracle`` per document — one JVM->Python crossing
-   for the whole stage; ZERO shuffles.  Used where Python-exact semantics
-   are load-bearing (arbitrary-unicode content in the KG pipeline).
+2. **`extract_mentions_arrow` — the KG pipeline and the mention stream**:
+   one fused mapInPandas running the *exact* Python-re tokenizer + shared
+   tagger + transcribed span merge of ``core.oracle`` per document — ZERO
+   shuffles, exact on arbitrary unicode, and stateless, so it runs
+   unchanged on a streaming source with an append-mode sink.
 
-3. **`mentions_hof` (fold form)**: zero-shuffle single-expression
-   aggregate() fold.  Kept as a cross-paradigm correctness check only:
-   Spark evaluates higher-order functions interpreted (CodegenFallback),
-   ~ms/doc — 16x slower than the window form.
-
-Plus `bio_spans_window_sql`: the engine-portable SQL formulation used as
-the DuckDB oracle twin.
+No higher-order-function fold form: Spark interprets HOFs
+(CodegenFallback), ~16x slower than the window form at sf0.1.
 """
 
 from __future__ import annotations
@@ -90,98 +85,27 @@ def tags_array(tokens_col: str) -> Column:
     )
 
 
+def span_start_case(tag: str, then: str, otherwise: str) -> str:
+    """SQL CASE inside a `transform(tags, (_, i) -> ...)` lambda: ``then``
+    where ``tag`` (== tags[i]) opens a span, else ``otherwise``.  The BIO
+    rule of app.py:335-416: B- opens; I- opens at i = 0, after O or after
+    another type (orphan-I promotion); O never opens."""
+    return (
+        f"CASE WHEN {tag} = 'O' THEN {otherwise}"
+        f" WHEN substr({tag}, 1, 2) = 'B-' THEN {then}"
+        f" WHEN i = 0 THEN {then}"
+        f" WHEN tags[i-1] = 'O' THEN {then}"
+        f" WHEN substr(tags[i-1], 3) != substr({tag}, 3) THEN {then}"
+        f" ELSE {otherwise} END"
+    )
+
+
 def doc_tokens(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.withColumn("tokens", tokens_array(text_col))
 
 
 def doc_tags(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return doc_tokens(docs, text_col).withColumn("tags", tags_array("tokens"))
-
-
-MENTION_COLS = [
-    "text", "type", "tag", "individual_tags", "tokens",
-    "start_position", "end_position",
-]
-
-_SPAN_STRUCT_SQL = (
-    "STRUCT<text: STRING, type: STRING, tag: STRING,"
-    " individual_tags: ARRAY<STRING>, tokens: ARRAY<STRING>,"
-    " start_position: INT, end_position: INT>"
-)
-_CUR_STRUCT_SQL = "STRUCT<pos: INT, token: STRING, tag: STRING>"
-
-
-def _mk_span(cur: str) -> str:
-    """SQL constructing one D10 mention record from the open accumulator.
-
-    The opening tag is rewritten to B-<type> — this *is* the orphan-I
-    promotion of app.py:383 (cur[0].tag may be an I- tag)."""
-    return f"""named_struct(
-      'text', concat_ws(' ', transform({cur}, c -> c.token)),
-      'type', substr({cur}[0].tag, 3),
-      'tag', concat('B-', substr({cur}[0].tag, 3)),
-      'individual_tags', transform({cur}, c -> c.tag),
-      'tokens', transform({cur}, c -> c.token),
-      'start_position', {cur}[0].pos,
-      'end_position', {cur}[size({cur})-1].pos)"""
-
-
-# One-pass BIO decode as an aggregate() fold over (pos, token, tag) structs.
-# Semantics of app.py:335-416: B- always opens (flushing any open span);
-# I- continues iff the open span has the same type, else flushes and opens
-# with promotion; O flushes; trailing open span flushed by the finish lambda.
-# A single linear expression: no cross-referencing columns, so Catalyst's
-# projection collapse cannot duplicate subtrees (the naive multi-column
-# formulation compiled in minutes; this compiles in milliseconds).
-_SPANS_FOLD_EXPR = f"""aggregate(
-  transform(tokens, (tok, i) ->
-    named_struct('pos', i, 'token', tok, 'tag', tags[i])),
-  named_struct(
-    'spans', cast(array() as ARRAY<{_SPAN_STRUCT_SQL}>),
-    'cur',   cast(array() as ARRAY<{_CUR_STRUCT_SQL}>)),
-  (acc, e) -> CASE
-    WHEN e.tag = 'O' THEN named_struct(
-      'spans', CASE WHEN size(acc.cur) > 0
-                    THEN array_append(acc.spans, {_mk_span("acc.cur")})
-                    ELSE acc.spans END,
-      'cur', cast(array() as ARRAY<{_CUR_STRUCT_SQL}>))
-    WHEN substr(e.tag, 1, 2) = 'B-'
-         OR size(acc.cur) = 0
-         OR substr(acc.cur[0].tag, 3) != substr(e.tag, 3)
-    THEN named_struct(
-      'spans', CASE WHEN size(acc.cur) > 0
-                    THEN array_append(acc.spans, {_mk_span("acc.cur")})
-                    ELSE acc.spans END,
-      'cur', array(e))
-    ELSE named_struct('spans', acc.spans, 'cur', array_append(acc.cur, e))
-    END,
-  acc -> CASE WHEN size(acc.cur) > 0
-              THEN array_append(acc.spans, {_mk_span("acc.cur")})
-              ELSE acc.spans END)"""
-
-
-def spans_array(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """docs + `spans` column: ARRAY<mention-struct> per document, computed
-    in one narrow pass (tokenize -> tag -> fold), zero shuffles."""
-    return doc_tags(docs, text_col).withColumn("spans", F.expr(_SPANS_FOLD_EXPR))
-
-
-def mentions_hof(docs: DataFrame, text_col: str = "text",
-                 keep_cols: list[str] | None = None) -> DataFrame:
-    """Shuffle-free mention extraction (higher-order-function fold form).
-
-    Zero exchanges, but Spark evaluates HOFs interpreted (CodegenFallback),
-    costing ~ms/doc — use `mentions` (window form, whole-stage codegen) on
-    the hot path; this form survives as a cross-paradigm correctness check.
-
-    Output columns: keep_cols + the D10 field set (FIXTURES.md §4.3):
-    text, type, tag, individual_tags, tokens, start_position, end_position.
-    """
-    keep_cols = keep_cols if keep_cols is not None else ["doc_id"]
-    d = spans_array(docs, text_col)
-    return d.select(*keep_cols, F.explode("spans").alias("m")).select(
-        *keep_cols, "m.*"
-    )
 
 
 def bio_tags_exploded(docs: DataFrame, text_col: str = "text",
@@ -207,8 +131,8 @@ def mentions(docs: DataFrame, text_col: str = "text",
     sequential span merge becomes: posexplode -> running-sum-of-starts
     window -> groupBy (doc_id, span_id).  The window and the groupBy both
     cluster on doc_id, so Catalyst plans exactly ONE exchange; every
-    operator is whole-stage-codegen (no interpreted higher-order funcs on
-    the hot path, unlike the `mentions` fold form).
+    operator is whole-stage-codegen (no interpreted higher-order funcs
+    on the per-token path).
     """
     keep_cols = keep_cols if keep_cols is not None else ["doc_id"]
     d = doc_tags(docs, text_col)
@@ -218,13 +142,7 @@ def mentions(docs: DataFrame, text_col: str = "text",
             "transform(tokens, (tok, i) -> named_struct("
             "'token', tok, 'tag', tags[i],"
             # span-start flag computed array-side too: no lag() needed
-            "'is_start', CASE"
-            "  WHEN tags[i] = 'O' THEN 0"
-            "  WHEN substr(tags[i], 1, 2) = 'B-' THEN 1"
-            "  WHEN i = 0 THEN 1"
-            "  WHEN tags[i-1] = 'O' THEN 1"
-            "  WHEN substr(tags[i-1], 3) != substr(tags[i], 3) THEN 1"
-            "  ELSE 0 END))"
+            f"'is_start', {span_start_case('tags[i]', '1', '0')}))"
         )).alias("pos", "e"),
     ).select(*keep_cols, "pos", "e.token", "e.tag", "e.is_start")
     from pyspark.sql.window import Window

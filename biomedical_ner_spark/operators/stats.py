@@ -31,16 +31,6 @@ def _driver_ranked_ids(spark, rows, sort_key, schema, id_from: int):
         [(*r, i + id_from) for i, r in enumerate(ordered)], schema)
 
 
-def entity_type_counts(mentions_df: DataFrame) -> DataFrame:
-    """A4 — flagship: entities per friendly type name (app.py:851-854)."""
-    return (
-        mentions_df
-        .select(F.expr(entity_name_case_sql("type")).alias("entity_type"))
-        .groupBy("entity_type")
-        .agg(F.count(F.lit(1)).alias("n_entities"))
-    )
-
-
 def entity_type_counts_from_docs(docs: DataFrame,
                                  text_col: str = "text") -> DataFrame:
     """A4 computed WITHOUT materializing mention rows: every mention
@@ -52,21 +42,18 @@ def entity_type_counts_from_docs(docs: DataFrame,
     mentions-then-count formulation pays (guide §2.4); the exchange here
     carries ~|types| rows per task after map-side combine.
 
-    Exactly equivalent to entity_type_counts(spans.mentions(docs)):
+    Exactly equivalent to counting spans.mentions(docs) rows per type:
     mention groups (doc_id, span_id) are in bijection with is_start
-    tokens, and substr(elems[0].tag, 3) IS the start token's type
-    (asserted by tests against the window path)."""
-    from .spans import doc_tags
+    tokens (both read spans.span_start_case), and substr(elems[0].tag, 3)
+    IS the start token's type (asserted by tests against the window
+    path)."""
+    from .spans import doc_tags, span_start_case
 
     d = doc_tags(docs, text_col)
     starts = d.select(F.explode(F.expr(
-        "filter(transform(tags, (t, i) -> CASE"
-        "  WHEN t = 'O' THEN NULL"
-        "  WHEN substr(t, 1, 2) = 'B-' THEN substr(t, 3)"
-        "  WHEN i = 0 THEN substr(t, 3)"
-        "  WHEN tags[i-1] = 'O' THEN substr(t, 3)"
-        "  WHEN substr(tags[i-1], 3) != substr(t, 3) THEN substr(t, 3)"
-        "  ELSE NULL END), x -> x IS NOT NULL)")).alias("type"))
+        "filter(transform(tags, (t, i) -> "
+        f"{span_start_case('t', 'substr(t, 3)', 'NULL')}),"
+        " x -> x IS NOT NULL)")).alias("type"))
     return (
         starts
         .select(F.expr(entity_name_case_sql("type")).alias("entity_type"))
@@ -185,41 +172,18 @@ def tag_map(tags_df: DataFrame) -> DataFrame:
     return ranked.withColumn("id", F.col("_rn").cast("int")).drop("_rn")
 
 
-def corpus_stats(tags_df: DataFrame, group_col: str = "lang") -> DataFrame:
-    """A8 — the FULL per-split statistics grid of
-    utils/fonctions.py:303-517 (analyze_dataset_statistics): doc/token/
-    entity-token/BIO counts and density, sentence-length mean/median/min/
-    max and >100-token count, entities-per-sentence mean/median, and
-    zero-entity-sentence count + percentage.
-
-    Two-level aggregation: per-(split, doc) partial counts first (one
-    shuffle on the doc key, map-side combined), then the tiny per-split
-    rollup — the exact medians run over the per-doc frame (one value per
-    doc), never the token stream.  'Sentence' = document sequence, as
-    everywhere in this engine; lengths reflect whatever truncation the
-    input tags carry (the P5 100-token cap on the query path, so
-    n_over_100 = 0 there — feed untruncated tags for raw-corpus stats)."""
-    ent = F.when(F.col("tag") != "O", 1).otherwise(0)
-    per_doc = tags_df.groupBy(group_col, "doc_id").agg(
-        F.count(F.lit(1)).alias("toks"),
-        F.sum(ent).alias("ents"),
-        F.sum(F.when(F.col("tag").startswith("B-"), 1).otherwise(0)).alias("b"),
-        F.sum(F.when(F.col("tag").startswith("I-"), 1).otherwise(0)).alias("i"),
-        F.sum(F.when(F.col("tag") == "O", 1).otherwise(0)).alias("o"),
-    )
-    return _corpus_rollup(per_doc, group_col)
-
-
 def corpus_stats_from_docs(docs: DataFrame, group_col: str = "lang",
                            text_col: str = "text") -> DataFrame:
-    """A8 with the per-doc counts computed ARRAY-SIDE (size/filter over
-    the per-doc tag array) instead of exploding the token stream and
-    shuffling it by (split, doc_id): the exchange feeding the rollup
-    carries ONE narrow row per document, not one per token (guide §2.3
-    aggregate-before-shuffle; the explode+groupBy shape shipped the
-    ~50x-larger token stream to arrive at the identical per-doc counts).
-    Zero-token documents produce no exploded rows in the tags_df form, so
-    they are filtered here too — identical group membership."""
+    """A8 — the FULL per-split statistics grid of
+    utils/fonctions.py:303-517 (analyze_dataset_statistics): doc/token/
+    entity-token/BIO counts and density, sentence (= document) length
+    mean/median/min/max and >100-token count, entities-per-sentence
+    mean/median, zero-entity-sentence count + percentage.
+
+    Per-doc counts are computed ARRAY-SIDE (size/filter over the per-doc
+    tag array), so the exchange feeding the rollup carries ONE narrow row
+    per document, not the ~50x-larger token stream (guide §2.3).
+    Zero-token documents are filtered, as exploding them would."""
     from .spans import doc_tags
 
     d = doc_tags(docs, text_col)
@@ -239,8 +203,8 @@ def corpus_stats_from_docs(docs: DataFrame, group_col: str = "lang",
 
 
 def _corpus_rollup(per_doc: DataFrame, group_col: str) -> DataFrame:
-    """Tiny per-split rollup shared by the explode and array-side A8
-    forms; exact medians run over the per-doc frame (one value/doc)."""
+    """Tiny per-split rollup of per-doc (toks, ents, b, i, o) counts;
+    exact medians run over the per-doc frame (one value/doc)."""
     n_docs = F.count(F.lit(1))
     zero = F.sum(F.when(F.col("ents") == 0, 1).otherwise(0))
     return per_doc.groupBy(F.col(group_col).alias("split")).agg(

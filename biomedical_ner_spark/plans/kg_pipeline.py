@@ -198,11 +198,12 @@ def run_kg_pipeline(
     (see _dyn_overwrite) — 1 keeps the one-file-per-bucket layout;
     "auto" (the default) sizes it so write tasks ~= 4x the cluster's
     default parallelism, the repo's JVM-stage partitioning rule.  The
-    isolated 38.9M-row write A/B (scripts/ab_relations_write.py, 1M
-    files) showed the one-file-per-bucket write is straggler-bound at
-    n_buckets tasks: 17.6-43 s at 32 tasks vs 7.6-8.6 s at 128 on the
-    same input and burns — task granularity, not IO bandwidth, is the
-    cap.  Row content is identical under every setting.
+    isolated 38.9M-row write A/B (BASELINE.md, "Bucketed-write sharding
+    knob"; 1M files) showed the one-file-per-bucket write is
+    straggler-bound at n_buckets tasks: 17.6-43 s at 32 tasks vs
+    7.6-8.6 s at 128 on the same input and burns — task granularity, not
+    IO bandwidth, is the cap.  Row content is identical under every
+    setting.
 
     The summary holds the stage totals (``stages``), the manifest row
     count, and per stage its wall seconds (``stage_walls``) and its Janino

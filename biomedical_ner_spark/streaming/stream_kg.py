@@ -3,14 +3,14 @@
 The reference is strictly request/response (one text per Streamlit click,
 app.py:728-757) — no watermarks or stateful semantics are required.  This
 module exists so the same extraction logic runs incrementally over an
-arriving file stream: readStream -> mention extraction (the identical
-narrow-stage operators) -> foreachBatch(kg micro-batch) with per-batch
-manifest rows, which is the streaming twin of the resumable batch pipeline.
+arriving file stream: readStream -> spans.extract_mentions_arrow (the
+batch KG pipeline's mention stage, unchanged) -> append-mode parquet sink
+with a checkpoint, the streaming twin of the resumable batch pipeline.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import spans
@@ -23,10 +23,11 @@ def stream_mentions(spark: SparkSession, input_dir: str,
                     max_files_per_trigger: int | None = None):
     """File-source stream of repo-shaped parquet -> mentions sink.
 
-    Extraction is the same narrow window-free stage used in batch
-    (doc_tags + span fold are per-row; the per-doc window/groupBy of the
-    default batch path is replaced by the fold form because streaming
-    aggregations would otherwise need an update-mode sink).
+    Extraction is the KG pipeline's mention stage,
+    spans.extract_mentions_arrow: one narrow, stateless mapInPandas per
+    microbatch (exact reference spans, no aggregation state), so append
+    mode needs no watermark.  The registry's window/groupBy form would
+    be a streaming aggregation and need an update-mode sink.
 
     ``max_files_per_trigger`` bounds each microbatch to N source files —
     with availableNow this drains the backlog in multiple real
@@ -38,9 +39,9 @@ def stream_mentions(spark: SparkSession, input_dir: str,
     src = with_content_sha(src).withColumn(
         "doc_id", F.xxhash64("repo", "path", "commit")
     )
-    m = spans.mentions_hof(
-        src, text_col="content",
-        keep_cols=["doc_id", "repo", "path", "commit", "content_sha"],
+    m = spans.extract_mentions_arrow(
+        src, text_col="content", id_col="doc_id", sha_col="content_sha",
+        keep_cols=["repo", "path", "commit"],
     )
     writer = (
         m.writeStream.format("parquet")

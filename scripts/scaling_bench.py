@@ -64,9 +64,10 @@ def measure(cpus: int) -> dict:
     # splits don't change when the cluster grows).  64 = 2x the largest
     # tested parallelism, sized so each Arrow task carries >= ~0.5 s of
     # work (see module doc: per-task setup is ~50 ms on this host).  Note
-    # the 256-part default of the JVM window+persist job shape (see
-    # scale_probe.py) does NOT transfer here: the mapInPandas stage has no
-    # per-doc window state, and oversplitting it pays 4x the task setup.
+    # the 256-part default of the JVM window+persist job shape (see the
+    # round-2 task-granularity finding in BASELINE.md) does NOT transfer
+    # here: the mapInPandas stage has no per-doc window state, and
+    # oversplitting it pays 4x the task setup.
     parts = int(os.environ.get("SCALING_PARTS", "64"))
     spark = get_spark(
         app_name=f"scaling-{cpus}",

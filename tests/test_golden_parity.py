@@ -46,11 +46,10 @@ def test_spark_tags_match_oracle(golden_docs):
             assert got[(i, p)] == pair
 
 
-@pytest.mark.parametrize("impl", ["window", "hof", "arrow"])
+@pytest.mark.parametrize("impl", ["window", "arrow"])
 def test_spark_mentions_match_oracle(golden_docs, impl):
     fn = {
         "window": spans.mentions,
-        "hof": spans.mentions_hof,
         "arrow": lambda d: spans.extract_mentions_arrow(d),
     }[impl]
     rows = fn(golden_docs).collect()

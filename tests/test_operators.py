@@ -51,9 +51,11 @@ def test_minhash_lsh_candidates(spark, dup_docs):
 
 
 def test_minhash_signature_matches_python_oracle(spark, dup_docs):
+    n_hashes = dedup.N_BANDS * dedup.ROWS_PER_BAND
     sig = {
-        (r.doc_id, r.hash_idx): r.minhash
-        for r in dedup.minhash_signatures(dup_docs).collect()
+        (r.doc_id, i): r[f"h{i}"]
+        for r in dedup.minhash_signatures_wide(dup_docs).collect()
+        for i in range(n_hashes)
     }
     from biomedical_ner_spark.core import tokenize_text
 
@@ -65,7 +67,7 @@ def test_minhash_signature_matches_python_oracle(spark, dup_docs):
         shingles = {
             " ".join(toks[i:i + 3]) for i in range(len(toks) - 2)
         }
-        for i in range(dedup.N_BANDS * dedup.ROWS_PER_BAND):
+        for i in range(n_hashes):
             want = min(
                 hashlib.md5(f"{i}:{s}".encode()).hexdigest()
                 for s in shingles

@@ -1,6 +1,6 @@
-"""All three span-merge implementations must produce identical mention sets
-on real driver data (not just golden sentences), and embedding near-dup
-finds planted duplicates."""
+"""Both span-merge implementations must produce identical mention sets on
+real driver data (not just golden sentences), and embedding near-dup finds
+planted duplicates."""
 
 from pyspark.sql import functions as F
 
@@ -15,13 +15,12 @@ def _key_set(df):
     }
 
 
-def test_three_span_paths_identical_on_testdata(spark, docs_small):
+def test_span_paths_identical_on_testdata(spark, docs_small):
     a = _key_set(spans.mentions(docs_small))
-    b = _key_set(spans.mentions_hof(docs_small))
-    c = _key_set(
+    b = _key_set(
         spans.extract_mentions_arrow(docs_small).drop("content_sha")
     )
-    assert a == b == c
+    assert a == b
     assert len(a) > 1000
 
 
@@ -44,8 +43,8 @@ def test_embedding_near_dups(spark):
 def test_span_merge_fuzz_random_lexicon_streams(spark):
     """Seeded fuzz: random streams over HEADS/CONTS/filler/digit/punct
     tokens (maximizing B-, chained I-, orphan-I, type-switch, trailing-
-    flush cases), one batch — all three Spark span paths must equal the
-    Python oracle exactly."""
+    flush cases), one batch — both Spark span paths must equal the Python
+    oracle exactly."""
     import random
 
     from biomedical_ner_spark.core.oracle import run_reference_pipeline
@@ -69,7 +68,6 @@ def test_span_merge_fuzz_random_lexicon_streams(spark):
                  r.end_position) for r in m.collect()}
 
     got_window = key_set(spans.mentions(df))
-    got_hof = key_set(spans.mentions_hof(df))
     got_arrow = key_set(spans.extract_mentions_arrow(df).drop("content_sha"))
 
     want = set()
@@ -79,5 +77,4 @@ def test_span_merge_fuzz_random_lexicon_streams(spark):
             want.add((did, e["text"], e["type"], e["tag"],
                       e["start_position"], e["end_position"]))
     assert got_window == want
-    assert got_hof == want
     assert got_arrow == want

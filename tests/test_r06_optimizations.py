@@ -2,7 +2,7 @@
 physical form must produce byte-identical results to the pre-r06
 formulation it replaced (the DuckDB oracle pins them too, but these run
 the OLD Spark form directly so a drift is attributed to the rewrite, not
-the oracle)."""
+the oracle).  The old forms live only here, inline in their tests."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,10 +15,17 @@ def _rows(df):
 
 
 def test_entity_type_counts_from_docs_matches_window_path(spark, docs_small):
+    from biomedical_ner_spark.lexicon import entity_name_case_sql
     from biomedical_ner_spark.operators import spans, stats
 
     new = stats.entity_type_counts_from_docs(docs_small)
-    old = stats.entity_type_counts(spans.mentions(docs_small))
+    # reference: materialize the window-path mention rows, count per type
+    old = (
+        spans.mentions(docs_small)
+        .select(F.expr(entity_name_case_sql("type")).alias("entity_type"))
+        .groupBy("entity_type")
+        .agg(F.count(F.lit(1)).alias("n_entities"))
+    )
     assert _rows(new) == _rows(old)
 
 
@@ -28,7 +35,16 @@ def test_corpus_stats_from_docs_matches_explode_path(spark):
     docs = spark.read.parquet(f"{SF_MED}/documents.parquet")
     tags = spans.bio_tags_exploded(docs, keep_cols=["doc_id", "lang"])
     new = stats.corpus_stats_from_docs(docs)
-    old = stats.corpus_stats(tags)
+    # reference: per-doc counts from the exploded token stream
+    tag = F.col("tag")
+    per_doc = tags.groupBy("lang", "doc_id").agg(
+        F.count(F.lit(1)).alias("toks"),
+        F.sum(F.when(tag != "O", 1).otherwise(0)).alias("ents"),
+        F.sum(F.when(tag.startswith("B-"), 1).otherwise(0)).alias("b"),
+        F.sum(F.when(tag.startswith("I-"), 1).otherwise(0)).alias("i"),
+        F.sum(F.when(tag == "O", 1).otherwise(0)).alias("o"),
+    )
+    old = stats._corpus_rollup(per_doc, "lang")
     assert new.columns == old.columns
     assert [f.dataType for f in new.schema.fields] == \
         [f.dataType for f in old.schema.fields]
@@ -152,13 +168,7 @@ def test_mentions_prefilter_matches_postfilter_window(spark, docs_small):
         F.posexplode(F.expr(
             "transform(tokens, (tok, i) -> named_struct("
             "'token', tok, 'tag', tags[i],"
-            "'is_start', CASE"
-            "  WHEN tags[i] = 'O' THEN 0"
-            "  WHEN substr(tags[i], 1, 2) = 'B-' THEN 1"
-            "  WHEN i = 0 THEN 1"
-            "  WHEN tags[i-1] = 'O' THEN 1"
-            "  WHEN substr(tags[i-1], 3) != substr(tags[i], 3) THEN 1"
-            "  ELSE 0 END))"
+            f"'is_start', {spans.span_start_case('tags[i]', '1', '0')}))"
         )).alias("pos", "e"),
     ).select("doc_id", "pos", "e.token", "e.tag", "e.is_start")
     w = (Window.partitionBy("doc_id").orderBy("pos")

@@ -61,9 +61,18 @@ def test_graph_tables_bucket_partitioned(spark, golden_docs, tmp_path):
 
 
 def test_streaming_extraction(spark, tmp_path):
+    from biomedical_ner_spark.sources.repos import REPO_SCHEMA, with_content_sha
     from biomedical_ner_spark.streaming.stream_kg import stream_mentions
 
-    repos = synthesize_repos(spark, n_files=40, seed=7)
+    # two non-ASCII documents: the ASCII SQL tokenizer of the window form
+    # would split their words and shift the positions of later mentions
+    repos = synthesize_repos(spark, n_files=40, seed=7).unionByName(
+        spark.createDataFrame([
+            ("org/ü", "src/größe.txt", "c1", "de",
+             "Größe naïve T-Zellen: p53 protein bindet die DNA in Zürich."),
+            ("org/ü", "src/δ.txt", "c2", "el",
+             "ΔNp63 — HeLa cells, mRNA 5µm; Jurkat line"),
+        ], REPO_SCHEMA))
     in_dir = str(tmp_path / "in")
     repos.write.parquet(in_dir)
     out_dir = str(tmp_path / "out")
@@ -71,20 +80,23 @@ def test_streaming_extraction(spark, tmp_path):
     q = stream_mentions(spark, in_dir, chk, out_dir)
     q.awaitTermination(120)
     got = spark.read.parquet(out_dir)
-    # streaming output equals the batch fold-form extraction
-    from biomedical_ner_spark.sources.repos import with_content_sha
-
+    # the sink equals a batch run of the same extractor, on every column
     src = with_content_sha(repos).withColumn(
         "doc_id", F.xxhash64("repo", "path", "commit"))
-    batch = spans.mentions(
-        src, text_col="content",
-        keep_cols=["doc_id", "repo", "path", "commit", "content_sha"],
+    batch = spans.extract_mentions_arrow(
+        src, text_col="content", id_col="doc_id", sha_col="content_sha",
+        keep_cols=["repo", "path", "commit"],
     )
-    a = {tuple(r) for r in got.select("doc_id", "text", "type",
-                                      "start_position").collect()}
-    b = {tuple(r) for r in batch.select("doc_id", "text", "type",
-                                        "start_position").collect()}
+    assert got.columns == batch.columns
+
+    def rows(df):
+        return sorted(tuple(tuple(v) if isinstance(v, list) else v
+                            for v in r) for r in df.collect())
+
+    a, b = rows(got), rows(batch)
     assert a == b and len(a) > 0
+    paths = {r[got.columns.index("path")] for r in a}
+    assert {"src/größe.txt", "src/δ.txt"} <= paths
 
 
 def test_windowed_event_counts_watermark_semantics(spark, tmp_path):

@@ -13,8 +13,6 @@ from biomedical_ner_spark.core.tagger import (
 from biomedical_ner_spark.operators.augment import (
     augment_sentence_py,
     augment_sentences,
-    balance_dataset,
-    class_counts,
     default_synonyms,
 )
 
@@ -127,29 +125,6 @@ def test_augment_matches_python_oracle(spark, sentences):
         for i, lab in enumerate(labs):
             if lab != "O":
                 assert toks[i] == src.tokens[i]
-
-
-def test_balance_dataset_adds_copies_for_rare_classes(spark, sentences):
-    extra = spark.createDataFrame(
-        [
-            (10, ["RNA", "binds"], ["B-RNA", "O"]),
-            (11, ["mRNA", "levels"], ["B-RNA", "O"]),
-            (12, ["DNA", "strands"], ["B-DNA", "O"]),
-        ],
-        "doc_id BIGINT, tokens ARRAY<STRING>, labels ARRAY<STRING>",
-    )
-    data = sentences.unionByName(extra)
-    counts = {r.cls: r.n for r in class_counts(data).collect()}
-    # median count is 3 -> protein (1) and cell_line (1) are deficient
-    assert counts == {"protein": 1, "cell_line": 1, "RNA": 3, "DNA": 4}
-    out = balance_dataset(data, spark, max_copies=2)
-    n_orig = data.count()
-    assert out.where("copy_idx = -1").count() == n_orig
-    aug = out.where("copy_idx >= 0")
-    assert aug.count() > 0
-    # only sentences containing a deficient class were augmented
-    aug_docs = {r.doc_id for r in aug.select("doc_id").distinct().collect()}
-    assert aug_docs == {0, 1}  # the protein and cell_line sentences
 
 
 def test_balance_ner_dataset_matches_python_twin(spark):
